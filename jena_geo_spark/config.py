@@ -44,10 +44,11 @@ DEFAULTS: dict[str, int] = {
 
 def knob(name: str) -> int:
     """Resolve a tuning knob: ``SPARK_GRAFT_<name>`` env override if set,
-    else the engine default.  Unknown names raise KeyError."""
+    else the engine default.  Unknown names raise KeyError, set or not."""
+    default = DEFAULTS[name]
     v = os.environ.get("SPARK_GRAFT_" + name)
     if v is None:
-        return DEFAULTS[name]
+        return default
     try:
         return int(v)
     except ValueError:

@@ -245,13 +245,6 @@ def _splice_encoded_rows(out_px, raw_in, template: bytes) -> np.ndarray:
     return res
 
 
-def _splice_encoded_batch(out_px, raw_in, template: bytes) -> pd.Series:
-    return pd.Series(
-        [r.tobytes() for r in _splice_encoded_rows(out_px, raw_in, template)],
-        dtype=object,
-    )
-
-
 def _arrow_decode(arr):
     """Arrow-side homogeneous-batch decode: (px, raw, first, little) or
     None — zero per-row Python on the hit path (guide §4.2: a binary

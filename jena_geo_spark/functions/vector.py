@@ -1031,11 +1031,6 @@ def gc_cell(lon: pd.Series, lat: pd.Series, res: pd.Series) -> pd.Series:
     return pd.Series(grid.encode_points(lon.to_numpy(np.float64), lat.to_numpy(np.float64), r))
 
 
-@pandas_udf(LongType())
-def gc_parent(cell: pd.Series, target_res: pd.Series) -> pd.Series:
-    return pd.Series(grid.ancestor_at(cell.to_numpy(np.int64), int(target_res.iloc[0])))
-
-
 _CELL_XY_T = StructType([StructField("ix", LongType()), StructField("iy", LongType())])
 
 

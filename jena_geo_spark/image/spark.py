@@ -29,7 +29,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
-from pyspark.sql.types import BooleanType, LongType
+from pyspark.sql.types import BooleanType
 
 from . import codec
 
@@ -118,14 +118,6 @@ def phash_matches(b: "pa.Array", w: "pa.Array", h: "pa.Array", fmt: "pa.Array", 
     stored = pc.fill_null(ph, 0).to_numpy(zero_copy_only=False).astype(np.int64)
     # validity mask: NULL for rows whose payload cannot be decoded
     return pa.array(uph[codes] == stored, mask=~ok[codes])
-
-
-@arrow_udf(LongType())
-def recompute_phash(b: "pa.Array", w: "pa.Array", h: "pa.Array", fmt: "pa.Array") -> "pa.Array":
-    codes, uph, ok = _factorized_phashes_arrow(b, w, h, fmt)
-    vals = uph[codes]
-    vals[~ok[codes]] = 0
-    return pa.array(vals)
 
 
 def with_phash_verified(df: DataFrame, out_col: str = "phash_ok") -> DataFrame:

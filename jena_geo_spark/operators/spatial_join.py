@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from .. import grid
 from ..functions.vector import gc_cell
 from ..geom import wkt as W
+from ..partitioning import widen_if_narrow
 
 FINE_RES = 24  # ~2.6 m cells at the equator; finer than any realistic cover
 
@@ -783,14 +784,9 @@ def polygon_join_frames(
             yield pd.DataFrame({"pid": ids_out, "cell": np.array(cells_out, dtype=np.int64)})
 
     def covers_of(df: DataFrame, out_id: str) -> DataFrame:
-        src = df.select(F.col(id_col), F.col(wkt_col))
         # cover construction is the CPU-heavy Python stage; a narrow source
-        # (e.g. one small parquet file) would serialize it on one core.
-        # Only widen when the source has fewer partitions than the cluster —
-        # at real scale the input already has thousands and this is a no-op.
-        par = spark.sparkContext.defaultParallelism
-        if src.rdd.getNumPartitions() < par:
-            src = src.repartition(par)
+        # (e.g. one small parquet file) would serialize it on one core
+        src = widen_if_narrow(df.select(F.col(id_col), F.col(wkt_col)))
         c = src.mapInPandas(cover_gen, "pid string, cell long")
         return c.select(F.col("pid").alias(out_id), "cell")
 
@@ -939,12 +935,8 @@ def pip_join_points_polygons_frames(
                 }
             )
 
-    src = polys.select(poly_id, wkt_col)
     # widen a narrow source so the CPU-heavy cover stage parallelises
-    # (no-op at real scale where the input has thousands of partitions)
-    par = spark.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
+    src = widen_if_narrow(polys.select(poly_id, wkt_col))
     cov = src.mapInPandas(cover_gen, cover_schema).localCheckpoint(eager=True)
     levels = sorted(
         r.l

@@ -8,7 +8,8 @@ exchange (guide §2.5 — "one huge unsplittable file: repartition
 immediately after the read").  ``widen_if_narrow`` round-robin
 repartitions ONLY when the input has fewer partitions than the cluster's
 parallelism — at real scale (thousands of splits) it is a no-op and adds
-no shuffle.
+no shuffle.  Every narrow-scan widen in the engine goes through this one
+helper, so the ``WIDEN_NARROW_SCANS`` knob covers all of them.
 
 Safety: only correct for operators whose results are
 aggregation-ORDER-free — integer counts, min/max, row-local projections,

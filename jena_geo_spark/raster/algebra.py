@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BinaryType, DoubleType
+from pyspark.sql.types import BinaryType
 
 from . import wkb_raster as WR
 
@@ -337,33 +337,3 @@ def spark_retile(df: DataFrame, raster_col: str, tile_w: int, tile_h: int) -> Da
         F.col("t.tile_row").alias("tile_row"),
         F.col("t.tile").alias("tile"),
     )
-
-
-# --------------------------------------------------------- Spark plumbing --
-
-
-def spark_map_algebra_const(df: DataFrame, raster_col: str, op: str, k: float) -> DataFrame:
-    """Raster column (binary WKB-raster) → transformed raster column.
-    One Arrow batch per UDF call; multi-op pipelines should compose inside
-    a single UDF stage (op fusion)."""
-
-    @pandas_udf(BinaryType())
-    def _udf(b: pd.Series) -> pd.Series:
-        return b.map(lambda x: WR.encode(map_algebra_const(WR.decode(bytes(x)), op, k)))
-
-    return df.withColumn(raster_col, _udf(F.col(raster_col)))
-
-
-def spark_raster_envelope(df: DataFrame, raster_col: str) -> DataFrame:
-    @pandas_udf("xmin double, ymin double, xmax double, ymax double")
-    def _udf(b: pd.Series) -> pd.DataFrame:
-        rows = [WR.decode(bytes(x)).envelope() for x in b]
-        a = np.array(rows, dtype=np.float64).reshape(-1, 4)
-        return pd.DataFrame({"xmin": a[:, 0], "ymin": a[:, 1], "xmax": a[:, 2], "ymax": a[:, 3]})
-
-    return df.withColumn("env", _udf(F.col(raster_col)))
-
-
-@pandas_udf(DoubleType())
-def st_raster_max(b: pd.Series) -> pd.Series:
-    return b.map(lambda x: float(max(bd.data.max() for bd in WR.decode(bytes(x)).bands)))

@@ -520,35 +520,6 @@ def rt_equals(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(out, dtype=object)
 
 
-@pandas_udf(BooleanType())
-def rt_containsproperly(a: pd.Series, b: pd.Series) -> pd.Series:
-    out = []
-    for x, y in zip(a, b):
-        if x is None or y is None:
-            out.append(None)
-            continue
-        e1 = WR.decode(bytes(x)).envelope()
-        e2 = WR.decode(bytes(y)).envelope()
-        out.append(e1[0] < e2[0] and e1[1] < e2[1] and e1[2] > e2[2] and e1[3] > e2[3])
-    return pd.Series(out, dtype=object)
-
-
-@pandas_udf(BooleanType())
-def rt_dwithin(a: pd.Series, b: pd.Series, d: pd.Series) -> pd.Series:
-    from .algebra import raster_distance
-
-    out = []
-    for i, x in enumerate(a):
-        y = b.iloc[i]
-        if x is None or y is None:
-            out.append(None)
-            continue
-        out.append(
-            raster_distance(WR.decode(bytes(x)), WR.decode(bytes(y))) <= float(d.iloc[i])
-        )
-    return pd.Series(out, dtype=object)
-
-
 @pandas_udf(BinaryType())
 def rt_intersection_geom(a: pd.Series, b: pd.Series) -> pd.Series:
     """Envelope-intersection polygon (raster/relation/Intersection.java)."""
@@ -566,23 +537,6 @@ def rt_intersection_geom(a: pd.Series, b: pd.Series) -> pd.Series:
             continue
         ring = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
         out.append(to_wkb(Geom("polygon", [ring])))
-    return pd.Series(out, dtype=object)
-
-
-@pandas_udf(BinaryType())
-def rt_symdifference_geom(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Envelope symmetric difference (raster/relation/SymDifference.java)."""
-    from ..geom import overlay as O
-    from ..geom import wkt as W
-
-    out = []
-    for x, y in zip(a, b):
-        if x is None or y is None:
-            out.append(None)
-            continue
-        g1 = _renv_geom(WR.decode(bytes(x)))
-        g2 = _renv_geom(WR.decode(bytes(y)))
-        out.append(W.to_wkb(O.overlay_geoms(g1, g2, "symdifference")))
     return pd.Series(out, dtype=object)
 
 

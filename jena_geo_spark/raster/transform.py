@@ -273,23 +273,6 @@ def st_resize(b: pd.Series, w: pd.Series, h: pd.Series) -> pd.Series:
     )
 
 
-@pandas_udf(BinaryType())
-def st_rescale(b: pd.Series, sx: pd.Series, sy: pd.Series) -> pd.Series:
-    return pd.Series(
-        [WR.encode(rescale(WR.decode(bytes(x)), float(u), float(v))) for x, u, v in zip(b, sx, sy)]
-    )
-
-
-@pandas_udf(BinaryType())
-def st_setbandnodata(b: pd.Series, band: pd.Series, nodata: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            WR.encode(set_band_nodata(WR.decode(bytes(x)), int(i), float(nd)))
-            for x, i, nd in zip(b, band, nodata)
-        ]
-    )
-
-
 @pandas_udf(DoubleType())
 def st_value(b: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
     return pd.Series(

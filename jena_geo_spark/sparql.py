@@ -70,6 +70,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions import registry as REG
+from .partitioning import widen_if_narrow
 
 # ----------------------------------------------------------------- prefixes --
 
@@ -1104,10 +1105,10 @@ class _Parser:
                 # is the graph's terms (W3C §18.4), so a bound endpoint
                 # x ∉ terms(G) can never chain x→x (empty graph,
                 # <x> p?/p? ?o must yield x; the desugared form yielded
-                # nothing).  Evaluate the WHOLE sequence as one relation
-                # (_path_rel's (R∪I)∘Q algebra is exact) and add the
-                # identity once, endpoint-aware, iff the sequence admits
-                # zero end-to-end.
+                # nothing).  Evaluate the WHOLE sequence as one bag
+                # relation (_path_rel's (R⊎aI)∘(Q⊎bI) algebra is exact)
+                # and add the identity, endpoint-aware, once per way the
+                # sequence admits zero end-to-end.
                 g.items.append(PathClosure(s, p, o, "seq"))
             else:
                 cur = s
@@ -2671,25 +2672,30 @@ class _GroupCompiler:
             f"path closure exceeded {self._PATH_SQUARE_ROUNDS} doubling rounds"
         )
 
-    def _path_rel(self, p) -> tuple[DataFrame, bool]:
+    def _path_rel(self, p) -> tuple[DataFrame, int]:
         """(src, dst) relation of an arbitrary path AST, as the pair
-        (R, has_zero) where the denoted relation is R ∪ I·has_zero and
-        I is the zero-length identity — the recursive generalisation of
-        the flattened-alternatives edge frame, used when a closure body
-        itself contains ``? * +`` (ARQ evaluates these with its ALP
-        iterator; here every combinator is a DataFrame operator: union
-        for ``|``, composition join for ``/``, swap for ``^``,
-        pointer-doubling closure for the mods).
+        (R, z) where the path denotes the bag R ⊎ z·I and I is the
+        zero-length identity — the recursive generalisation of the
+        flattened-alternatives edge frame, used for a closure body that
+        itself contains ``? * +`` and for a whole zero-admitting
+        sequence (ARQ evaluates these with its ALP iterator; here every
+        combinator is a DataFrame operator: union for ``|``, composition
+        join for ``/``, swap for ``^``, pointer-doubling closure for the
+        mods).
 
-        The identity is NEVER materialized into R: it would put the
-        whole term domain through every composition and doubling join,
-        and it is wrong for bound endpoints anyway (W3C ZeroLengthPath
-        matches a bound term whether or not it occurs in the graph, so
-        the caller must decide the identity domain).  Algebra used:
-        (R∪I)∘Q = R∘Q ∪ Q, closure(R∪I) = closure(R) ∪ I,
+        Bag semantics per W3C §18.4: ``|`` adds multiplicities, ``/``
+        multiplies them, and only ``? * +`` yield sets.  The identity is
+        NEVER materialized into R: it would put the whole term domain
+        through every composition and doubling join, and it is wrong
+        for bound endpoints anyway (W3C ZeroLengthPath matches a bound
+        term whether or not it occurs in the graph, so the caller must
+        decide the identity domain).  Algebra used:
+        (R⊎aI)∘(Q⊎bI) = R∘Q ⊎ b·R ⊎ a·Q ⊎ ab·I,
+        set(R ∪ I) = (set(R) − diagonal) ⊎ I (the identity carries
+        every diagonal pair of R), closure(R∪I) = closure(R) ∪ I,
         closure(closure(R)) = closure(R)."""
         if isinstance(p, Iri):
-            return self._step_frame(p.iri, False), False
+            return self._step_frame(p.iri, False), 0
         if isinstance(p, PathNPS):
             f, b, _ = self.model.star_frame(
                 [Triple(Var("__ps"), Var("__pp"), Var("__po"))], "__ps"
@@ -2711,7 +2717,7 @@ class _GroupCompiler:
             r = parts[0]
             for q in parts[1:]:
                 r = r.unionByName(q)
-            return r.distinct(), False
+            return r, 0
         if isinstance(p, PathInv):
             r, z = self._path_rel(p.path)
             return (
@@ -2722,8 +2728,8 @@ class _GroupCompiler:
             ra, za = self._path_rel(p.parts[0])
             for part in p.parts[1:]:
                 rb, zb = self._path_rel(part)
-                ra, za = ra.unionByName(rb), za or zb
-            return ra.distinct(), za
+                ra, za = ra.unionByName(rb), za + zb
+            return ra, za
         if isinstance(p, PathSeq):
             ra, za = self._path_rel(p.parts[0])
             for part in p.parts[1:]:
@@ -2732,19 +2738,21 @@ class _GroupCompiler:
                 comp = ra.join(nxt, ra["dst"] == nxt["__mid"]).select(
                     "src", F.col("__nxt").alias("dst")
                 )
-                if za:  # (R∪I)∘Q ⊇ Q
+                for _ in range(za):  # (R⊎aI)∘Q ⊇ a·Q
                     comp = comp.unionByName(rb)
-                if zb:  # R∘(Q∪I) ⊇ R
+                for _ in range(zb):  # R∘(Q⊎bI) ⊇ b·R
                     comp = comp.unionByName(ra)
-                ra, za = comp.distinct(), za and zb
+                ra, za = comp, za * zb
             return ra, za
         if isinstance(p, PathMod):
             base, z = self._path_rel(p.path)
-            rel = self._transitive_closure(base) if p.mod in ("*", "+") else base
-            return rel, z or p.mod in ("?", "*")
+            if p.mod == "+" and not z:
+                return self._transitive_closure(base), 0
+            rel = self._transitive_closure(base) if p.mod != "?" else base.distinct()
+            return rel.where(F.col("src") != F.col("dst")), 1
         raise NotImplementedError(f"unsupported path shape {p!r}")
 
-    def _path_edge_frame(self, pc: PathClosure) -> tuple[DataFrame, bool]:
+    def _path_edge_frame(self, pc: PathClosure) -> tuple[DataFrame, int]:
         """Edge relation of the closure body as (R, has_zero):
         alternatives union, a sequence alternative composes its steps
         with equi-joins (src→mid₁→…→dst) — still a fixed relation, so
@@ -2770,7 +2778,7 @@ class _GroupCompiler:
         e = parts[0]
         for p in parts[1:]:
             e = e.unionByName(p)
-        return e.distinct(), False
+        return e.distinct(), 0
 
     def _path_closure_frame(self, pc: PathClosure):
         """``s path{mod} o`` → (pairs frame, binds) — or (pairs, None)
@@ -2877,7 +2885,11 @@ class _GroupCompiler:
                 ident = nodes.select(
                     F.col("n").alias("src"), F.col("n").alias("dst")
                 )
-            pairs = pairs.unionByName(ident).distinct()
+            if mod == "seq":  # a bag: one identity row per zero-length route
+                for _ in range(ez):
+                    pairs = pairs.unionByName(ident)
+            else:
+                pairs = pairs.unionByName(ident).distinct()
 
         if s_const is not None:
             pairs = pairs.where(F.col("src") == s_const)
@@ -3085,33 +3097,14 @@ class _GroupCompiler:
             from .functions.vector import st_bounds
 
             # asNondeterministic: optimizer barrier only (the kernel is
-            # pure) — keeps the envelope filter above the parallel()
-            # repartition Exchange; see parallel() docstring
+            # pure).  The general (non-point) paths widen an under-split
+            # frame with widen_if_narrow so the per-row kernel does not
+            # serialize; Catalyst would push a deterministic filter back
+            # through that bare repartition, so every widened call site
+            # marks its kernel nondeterministic instead of materializing
+            # a checkpoint at compile time (guide §4.4, the same pin
+            # refine_candidates uses)
             return st_bounds.asNondeterministic()(wkb_col())
-
-        def parallel(f):
-            """The general (non-point) paths insert a per-row Python
-            kernel; a dimension-sized scan often arrives as 1-2 input
-            splits (one small parquet file), which would serialize the
-            Arrow stage.  Repartition up to the session's parallelism
-            ONLY when the frame is under-split — on a real cluster the
-            scan already carries hundreds of partitions and this is a
-            no-op (no shuffle added).
-
-            r6: no localCheckpoint any more — the eager checkpoint ran a
-            full Spark job at query-COMPILE time (even for plans never
-            executed) and pinned executor blocks for the session (ADVICE
-            r5 #3).  The optimizer barrier that used to need it (Catalyst
-            pushes a deterministic filter straight back through a bare
-            repartition, re-serializing the Python stage) is now the
-            kernel UDF itself: every parallel()-guarded call site marks
-            its pandas kernel ``asNondeterministic()`` (guide §4.4 — the
-            same pin ``refine_candidates`` uses), which stops the
-            pushdown without materializing anything."""
-            target = f.sparkSession.sparkContext.defaultParallelism
-            if f.rdd.getNumPartitions() * 2 < target:
-                return f.repartition(target)
-            return f
 
         vals = pf.args
         name = pf.name
@@ -3162,7 +3155,7 @@ class _GroupCompiler:
                     "west": F.col(lon_c) <= qlon,
                 }[name]
             else:
-                frame = parallel(frame)
+                frame = widen_if_narrow(frame)
                 env = env_col()
                 cond = {
                     "north": env["ymax"] >= qlat,
@@ -3186,7 +3179,7 @@ class _GroupCompiler:
                     & (F.col(lon_c) >= lon_min)
                     & (F.col(lon_c) <= lon_max)
                 )
-            frame = parallel(frame)
+            frame = widen_if_narrow(frame)
             env = env_col()
             if name == "withinbox":
                 cond = (
@@ -3234,10 +3227,10 @@ class _GroupCompiler:
                 dy = F.col(lat_c) - qlat_c
                 dist = F.sqrt(dx * dx + dy * dy)
             else:
-                frame = parallel(frame)
+                frame = widen_if_narrow(frame)
                 pt = REG.REGISTRY["st_makepoint"][0](qlon_c, qlat_c)
                 # barrier against filter pushdown through the repartition
-                # (pure kernel; see parallel() docstring)
+                # (pure kernel; see env_col)
                 dist = REG.REGISTRY["st_distance"][0].asNondeterministic()(
                     wkb_col(), pt
                 )
@@ -3286,9 +3279,9 @@ class _GroupCompiler:
         else:
             from .functions.vector import spatial_nearby_distance_m
 
-            frame = parallel(frame)
+            frame = widen_if_narrow(frame)
             # barrier against filter pushdown through the repartition
-            # (pure kernel; see parallel() docstring)
+            # (pure kernel; see env_col)
             dist_m = spatial_nearby_distance_m.asNondeterministic()(
                 F.col(st["binds"][gv]).cast("string"), qlon_c, qlat_c
             )

@@ -16,6 +16,12 @@ def test_knob_defaults_and_env_override(monkeypatch):
         C.knob("NO_SUCH_KNOB")
 
 
+def test_knob_unknown_name_raises_even_when_env_set(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_NO_SUCH_KNOB", "5")
+    with pytest.raises(KeyError):
+        C.knob("NO_SUCH_KNOB")
+
+
 def test_knob_malformed_env_names_the_variable(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_SPATIAL_DIM_MAX", "1e5")
     with pytest.raises(ValueError, match="SPARK_GRAFT_SPATIAL_DIM_MAX.*1e5"):

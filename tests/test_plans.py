@@ -46,6 +46,30 @@ def test_filter_pushdown_to_scan(imgs):
     assert "GreaterThan(lon,0" in plan.replace(" ", "")
 
 
+def test_single_file_scan_splits_at_most_one_per_core(spark, tmp_path):
+    """The session keeps Spark's own split rule, min(128 MiB, max(openCost,
+    bytes / defaultParallelism)): a ~24 MB file of 12 row groups is read in
+    at most one partition per core, so a Python stage over the scan runs
+    in one wave (a fixed 2 MiB split would give ~12 partitions)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 3_000_000
+    vals = np.random.default_rng(5).integers(0, 2**62, n)
+    path = str(tmp_path / "wide.parquet")
+    pq.write_table(
+        pa.table({"v": vals}),
+        path,
+        row_group_size=n // 12,
+        compression="none",
+        use_dictionary=False,
+    )
+    assert pq.ParquetFile(path).num_row_groups >= 12
+    par = spark.sparkContext.defaultParallelism
+    assert spark.read.parquet(path).rdd.getNumPartitions() <= par
+
+
 def test_column_pruning_join_never_reads_bytes(spark, imgs, covers):
     out = spatial_join_points_zones(
         spark, imgs.select("image_id", "caption", "lon", "lat"), covers
